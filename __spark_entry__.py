@@ -967,18 +967,25 @@ def q_cube_lineitem(spark, sf_dir):
     """Profile metrics under CUBE grouping (free via Catalyst — the
     reference has no grouping sets; SURVEY.md §2.4 'grouping sets' row).
     NULL markers in the cube output double as the all-group rows."""
-    from whylogs_java_spark.functions.metrics import (
-        numeric_atom_exprs,
-        numeric_final_exprs,
+    from whylogs_java_spark.plans.spark_sql import (
+        numeric_aggs_sql,
+        numeric_projection_sql,
     )
 
     li = _t(spark, sf_dir, "lineitem")
-    atoms = li.cube("l_returnflag", "l_linestatus").agg(
+    atoms = li.selectExpr(
+        "l_returnflag",
+        "l_linestatus",
+        *numeric_projection_sql("CAST(l_quantity AS DOUBLE)", "q"),
+    ).cube("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).cast("long").alias("count"),
-        *numeric_atom_exprs(F.col("l_quantity"), "q"),
+        *[F.expr(e) for e in numeric_aggs_sql("q", "q")],
     )
-    finals = [e.alias(n) for n, e in numeric_final_exprs("q", "qty_").items()]
-    return atoms.select("l_returnflag", "l_linestatus", "count", *finals)
+    return spark.sql(
+        "SELECT l_returnflag, l_linestatus, `count`, "
+        f"{numeric_final_sql('q', 'qty_')} FROM {{src}}",
+        src=atoms,
+    )
 
 
 def q_charpos_documents(spark, sf_dir):

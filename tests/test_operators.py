@@ -795,7 +795,7 @@ def test_resolve_clusters_driver_tier_matches_loop(spark, monkeypatch):
     # be bit-identical to the distributed label loop — labels, survivor
     # flags, AND the rounds counter, including ghost-edge semantics and
     # max_iters truncation on an unconverged chain
-    from whylogs_java_spark.operators.dedup import resolve_clusters
+    from whylogs_java_spark.operators import dedup
 
     cases = [
         # (edges, nodes, max_iters)
@@ -809,12 +809,12 @@ def test_resolve_clusters_driver_tier_matches_loop(spark, monkeypatch):
         nodes = spark.createDataFrame([(n,) for n in node_ids], "doc_id long")
         s_loop: dict = {}
         s_drv: dict = {}
-        monkeypatch.setenv("WHYLOGS_SPARK_CC_DRIVER_CAP", "0")
-        loop = sorted(map(tuple, resolve_clusters(
+        monkeypatch.setattr(dedup, "_CC_DRIVER_CAP", 0)
+        loop = sorted(map(tuple, dedup.resolve_clusters(
             pairs, nodes, "doc_id", mi, stats=s_loop
         ).collect()))
-        monkeypatch.setenv("WHYLOGS_SPARK_CC_DRIVER_CAP", "200000")
-        drv = sorted(map(tuple, resolve_clusters(
+        monkeypatch.setattr(dedup, "_CC_DRIVER_CAP", 200_000)
+        drv = sorted(map(tuple, dedup.resolve_clusters(
             pairs, nodes, "doc_id", mi, stats=s_drv
         ).collect()))
         assert drv == loop, (edges, mi)

@@ -105,6 +105,40 @@ def test_merge_equals_whole(spark):
                 assert mv == wv, (k, f)
 
 
+def test_finalize_profile_schema(spark):
+    # the finalized summary is read by field name downstream (protobuf
+    # ColumnMessage assembly, drift, the monitor): pin the column order and
+    # the Spark type of every field, so a type drift (e.g. n long -> double)
+    # fails here rather than in a name-sorted, stringified value compare
+    df = spark.createDataFrame(
+        [("a", 1, 2.5, "x y"), ("b", None, float("nan"), None)],
+        "k string, i long, d double, s string",
+    )
+    out = finalize_profile(profile_atoms(df, group_by=["k"]), ["k"])
+    suite = ["n", "min", "max", "sum", "mean", "variance", "stddev"]
+    suite_types = ["bigint"] + ["double"] * 6
+    expected = (
+        [("k", "string"), ("column_name", "string")]
+        + [
+            (f, "bigint")
+            for f in (
+                "count", "null_count", "true_count", "integral_count",
+                "fractional_count", "boolean_count", "string_count",
+                "unknown_count",
+            )
+        ]
+        + [("inferred_type", "string")]
+        + [
+            (pre + f, t)
+            for pre in ("", "len_", "tok_")
+            for f, t in zip(suite, suite_types)
+        ]
+    )
+    got = [(f.name, f.dataType.simpleString()) for f in out.schema.fields]
+    assert got == expected
+    assert out.count() == 6
+
+
 def test_variance_edge_cases(spark):
     # VarianceTracker.java:31-46: n==1 -> 0; n==0 -> NULL (ref: NaN)
     df = spark.createDataFrame([(1.0,)], "x double")

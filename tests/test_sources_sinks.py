@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_DIR
 from whylogs_java_spark.sources.parquet import load_table
 from whylogs_java_spark import profile, profile_atoms
+from whylogs_java_spark.functions.metrics import ATOM_METRICS
 from whylogs_java_spark.operators.approx import (
     approx_unique_counts,
     merge_sketch_profiles,
@@ -273,17 +274,19 @@ def test_approx_unique_counts(spark):
 # ---------------------------------------------------------------------------
 
 def test_streaming_profile_matches_batch(spark, tmp_path):
+    # every atom of a numeric, an integral and two string columns must match
+    # the batch profile at day granularity: both run the same plan fragments
     ev = load_table(spark, SF_DIR, "events")
     src = str(tmp_path / "stream_src")
     ev.write.parquet(src)
     stream = spark.readStream.schema(ev.schema).parquet(src)
+    cols = ["value", "user_id", "event_type", "props"]
     atoms = profile_stream(
         stream,
         time_column="ts",
         window_duration="1 day",
         watermark="0 seconds",
-        group_by=["event_type"],
-        columns=["value"],
+        columns=cols,
     )
     q = (
         atoms.writeStream.outputMode("complete")
@@ -293,27 +296,29 @@ def test_streaming_profile_matches_batch(spark, tmp_path):
     )
     try:
         q.processAllAvailable()
-        got = spark.sql(
-            "SELECT window_start, event_type, value_count, value_num_sum_hi FROM stream_prof"
-        ).collect()
+        got = spark.sql("SELECT * FROM stream_prof").collect()
     finally:
         q.stop()
     batch = profile_atoms(
-        ev, group_by=["event_type"], time_column="ts", time_granularity="day",
-        columns=["value"],
+        ev, time_column="ts", time_granularity="day", columns=cols
     ).collect()
     bk = {
-        (str(r["dataset_timestamp"]), r["event_type"]): (r["count"], r["num_sum_hi"])
-        for r in batch
+        (str(r["dataset_timestamp"]), r["column_name"]): r for r in batch
     }
     sk = {
-        (str(r["window_start"].date()), r["event_type"]): (
-            r["value_count"],
-            r["value_num_sum_hi"],
-        )
-        for r in got
+        (str(r["window_start"].date()), c): r for r in got for c in cols
     }
-    assert sk == bk
+    assert set(sk) == set(bk)
+    for key, b in bk.items():
+        s = sk[key]
+        for field, typ in ATOM_METRICS:
+            sv, bv = s[f"{key[1]}_{field}"], b[field]
+            if typ == "double" and sv is not None and bv is not None:
+                # the m2 atom comes from var_samp, whose merge order
+                # follows the partitioning (last-ulp differences only)
+                assert sv == pytest.approx(bv, rel=1e-12), (key, field)
+            else:
+                assert sv == bv, (key, field)
 
 
 # ---------------------------------------------------------------------------

@@ -20,7 +20,6 @@ FREQUENT_ITEMS_K = 128
 STRING_LENGTH_MAX = 256
 SUMMARY_QUANTILES = [0.0, 0.01, 0.05, 0.25, 0.5, 0.75, 0.95, 0.99, 1.0]
 HISTOGRAM_DEFAULT_BINS = 30
-TOKEN_DELIMITER = " "
 TAG_PREFIX = "whylogs.tag."
 
 # Exact decimal type used for cross-engine-deterministic floating sums.

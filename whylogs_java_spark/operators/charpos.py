@@ -19,7 +19,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.metrics import numeric_atom_exprs, numeric_final_exprs
+from ..functions.metrics import numeric_atom_sql, numeric_final_sql
+from ..plans.spark_sql import numeric_aggs_sql, numeric_projection_sql
 
 # CharPosTracker.java:49 verbatim (sic: missing 'x', duplicate 'z')
 DEFAULT_CHARSET = "abcdefghijklmnopqrstuvwzyz0123456789-@!#$%^&*()[]{}"
@@ -48,17 +49,20 @@ def char_pos_stats(
         F.when(F.col("ch").isin(chars), F.col("ch")).otherwise(NITL).alias("character"),
         F.col("pos").cast("double").alias("p"),
     )
-    atoms = bucketed.groupBy(*keys, "character").agg(
-        *numeric_atom_exprs(F.col("p"), "pos")
+    cells = [*(f"`{k}`" for k in keys), "character"]
+    atoms = (
+        bucketed.selectExpr(*cells, *numeric_projection_sql("p", "p"))
+        .groupBy(*keys, "character")
+        .agg(*[F.expr(e) for e in numeric_aggs_sql("p", "pos")])
     )
-    finals = [e.alias(n) for n, e in numeric_final_exprs("pos", "").items()]
-    return atoms.select(*keys, "character", *finals)
+    return atoms.sparkSession.sql(
+        f"SELECT {', '.join(cells)}, {numeric_final_sql('pos', '')} FROM {{src}}",
+        src=atoms,
+    )
 
 
 def char_pos_sql(table: str, text_col: str, group_by: Sequence[str] = ()) -> str:
     """DuckDB oracle for char_pos_stats (same charset, 0-based positions)."""
-    from ..functions.metrics import numeric_atom_sql, numeric_final_sql
-
     chars = sorted(set(DEFAULT_CHARSET.lower()))
     inlist = ", ".join("'" + c.replace("'", "''") + "'" for c in chars)
     keys = "".join(f"{k}, " for k in group_by)

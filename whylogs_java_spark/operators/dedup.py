@@ -21,8 +21,6 @@ oracle-checkable in DuckDB with the same formulas.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -874,6 +872,13 @@ def hamming_distance(bits_a: Column, bits_b: Column) -> Column:
     )
 
 
+# Edge-count bound for the resolve_clusters driver tier: pair lists at or
+# under it are broadcast-sized (two ids per row, a few MB collected — the
+# same order as a broadcast-join build side); above it the distributed
+# label loop runs.
+_CC_DRIVER_CAP = 200_000
+
+
 def resolve_clusters(
     pairs: DataFrame,
     nodes: DataFrame,
@@ -924,13 +929,12 @@ def resolve_clusters(
     than the minimal convergence round — it is a work counter, not the
     graph-diameter bound; labels are identical either way.
 
-    Label-engine pair lists at or under ``WHYLOGS_SPARK_CC_DRIVER_CAP``
-    edges (default 200k — broadcast-sized) take a DRIVER TIER instead of
-    the distributed loop: the collected edge list is propagated in a
-    Python loop that replays the label engine step for step (seeding,
-    ghost semantics, two-step batching, ``max_iters`` truncation, the
-    ``rounds`` counter), and the labels rejoin the plan as a broadcast
-    ``literal_df``. Output is bit-identical on every graph; only the
+    Label-engine pair lists at or under ``_CC_DRIVER_CAP`` edges (200k —
+    broadcast-sized) take a DRIVER TIER instead of the distributed loop:
+    the collected edge list is propagated in a Python loop that replays
+    the label engine step for step (seeding, ghost semantics, two-step
+    batching, ``max_iters`` truncation, the ``rounds`` counter), and the
+    labels rejoin the plan as a broadcast ``literal_df``. Output is bit-identical on every graph; only the
     number of driver actions changes (guide §5).
 
     Output: (id_col, cluster_id, is_survivor) — survivor = the cluster's
@@ -951,7 +955,7 @@ def resolve_clusters(
     # plus a count job.
     pairs = pairs.transform(materialize_lazy)
     n_pairs = pairs.count()
-    if n_pairs <= _cc_driver_cap():
+    if n_pairs <= _CC_DRIVER_CAP:
         # DRIVER TIER — the broadcast-side analog for tiny dup graphs
         # (guide §3.1/§5): a pair list this small is broadcast-sized, and
         # a single driver pass over it is cheaper than even one
@@ -963,9 +967,7 @@ def resolve_clusters(
         # batching, same ``max_iters`` truncation, same ``rounds``
         # counter — so labels (and ``stats``) are bit-identical to the
         # distributed loop. Labels return to the plan as a broadcastable
-        # ``literal_df`` LocalRelation. Cap via
-        # ``WHYLOGS_SPARK_CC_DRIVER_CAP`` (edges; default 200k ≈ a few MB
-        # collected — the same order as a broadcast-join build side).
+        # ``literal_df`` LocalRelation. Cap: ``_CC_DRIVER_CAP`` edges.
         return _resolve_clusters_driver(pairs, nodes, id_col, max_iters, stats)
     edges = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
@@ -1034,17 +1036,6 @@ def resolve_clusters(
             (F.coalesce("label", "id") == F.col("id")).alias("is_survivor"),
         )
     )
-
-
-def _cc_driver_cap() -> int:
-    """Edge-count bound for the resolve_clusters driver tier. Pair lists
-    under the cap are broadcast-sized (two ids per row); above it the
-    distributed label loop runs. Parameterized for cluster ops — a fat
-    driver can raise it, a thin one lower it."""
-    try:
-        return int(os.environ.get("WHYLOGS_SPARK_CC_DRIVER_CAP", "200000"))
-    except ValueError:
-        return 200_000
 
 
 def _resolve_clusters_driver(

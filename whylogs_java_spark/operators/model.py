@@ -17,7 +17,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.metrics import numeric_atom_exprs, numeric_final_exprs
+from ..functions.metrics import numeric_final_sql
+from ..plans.spark_sql import numeric_aggs_sql, numeric_projection_sql
 
 
 def _label(col: Column, dt: T.DataType) -> Column:
@@ -49,16 +50,20 @@ def confusion_matrix(
         _label(F.col(target), schema[target]).alias("target"),
         *([F.col(score).cast("double").alias("__score")] if score else []),
     )
+    cells = [*keys, "prediction", "target"]
     aggs = [F.count(F.lit(1)).alias("count")]
     if score:
-        aggs += numeric_atom_exprs(F.col("__score"), "score")
-    res = out.groupBy(*keys, "prediction", "target").agg(*aggs)
+        out = out.selectExpr(
+            *(f"`{c}`" for c in cells), *numeric_projection_sql("__score", "__score")
+        )
+        aggs += [F.expr(e) for e in numeric_aggs_sql("__score", "score")]
+    res = out.groupBy(*cells).agg(*aggs)
     if score:
-        finals = [
-            e.alias(name)
-            for name, e in numeric_final_exprs("score", "score_").items()
-        ]
-        res = res.select(*keys, "prediction", "target", "count", *finals)
+        cols = "".join(f"`{c}`, " for c in cells)
+        res = res.sparkSession.sql(
+            f"SELECT {cols}`count`, {numeric_final_sql('score', 'score_')} FROM {{src}}",
+            src=res,
+        )
     return res
 
 

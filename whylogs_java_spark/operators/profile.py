@@ -30,7 +30,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.metrics import ATOM_METRICS, finalize_exprs
+from ..functions.metrics import ATOM_METRICS
+from ..plans.spark_sql import build_atoms_sql, build_melted_atoms_sql, finalize_select_sql
 
 
 def profile_atoms(
@@ -54,8 +55,6 @@ def profile_atoms(
     text is a single JVM call producing the identical Catalyst plan
     (projection -> partial+final hash-agg -> inline explode).
     """
-    from ..plans.spark_sql import build_atoms_sql
-
     schema = {f.name: f.dataType for f in df.schema.fields}
     sql, _ = build_atoms_sql(
         "{src}",
@@ -88,8 +87,6 @@ def profile_atoms_melted(
     Spark-first equivalent of the reference's 100-column batching,
     WhyLogs.scala:146-176).
     """
-    from ..plans.spark_sql import build_melted_atoms_sql
-
     schema = {f.name: f.dataType for f in df.schema.fields}
     sql, _ = build_melted_atoms_sql(
         "{src}", schema, group_by, time_column, time_granularity, columns, null_strings
@@ -114,8 +111,15 @@ def profile_melted(
 
 
 def finalize_profile(atoms: DataFrame, key_names: Sequence[str]) -> DataFrame:
-    """Atoms -> summary metrics (mean/variance/stddev/inferred type...)."""
-    return atoms.select(*key_names, F.col("column_name"), *finalize_exprs())
+    """Atoms -> summary metrics (mean/variance/stddev/inferred type...).
+
+    Output field set mirrors ColumnSummary/NumberSummary/StringSummary
+    (core/.../SummaryConverters.java:75-138); the finalizer and
+    type-inference SQL are the ones the DuckDB oracle runs.
+    """
+    return atoms.sparkSession.sql(
+        finalize_select_sql(key_names) + " FROM {src}", src=atoms
+    )
 
 
 def profile(

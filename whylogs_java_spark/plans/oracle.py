@@ -80,7 +80,7 @@ def _token_count_sql(m: str) -> str:
     DuckDB dialect — mirrors plans.spark_sql._token_count_sql."""
     from .spark_sql import _token_count_sql as _spark_tok
 
-    return _spark_tok(m, " ", "len(str_split({t}, '{d}'))")
+    return _spark_tok(m, "len(str_split({t}, ' '))")
 
 
 def _num_atoms(val: str, prefix: str) -> str:

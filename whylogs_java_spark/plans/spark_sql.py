@@ -1,4 +1,11 @@
-"""Spark-SQL text generator for the profile aggregation.
+"""Spark-SQL text generator: the one Spark-side definition of the profile.
+
+Every Spark plan that computes profile atoms or finalizes them is built
+from the fragments here — the batch profile (``build_atoms_sql``), the
+melt path, the windowed streaming profile (``_ColumnSql`` fragments via
+``selectExpr``/``F.expr``), ``finalize_select_sql``, and the small numeric
+suites of the model/charpos/cube operators (``numeric_projection_sql`` +
+``numeric_aggs_sql``).
 
 Why text instead of Column trees: building the ~400 expressions of a wide
 profile through the PySpark Column API costs seconds of py4j round trips
@@ -7,7 +14,7 @@ whole cluster-side execution at sf0.1). Emitting one SQL statement makes
 plan construction a single JVM call; Catalyst sees the identical logical
 plan.
 
-The numeric atoms / finalizers / type-inference CASE tree are shared with
+The finalizers / type-inference CASE tree / token count are shared with
 the DuckDB oracle generator (same SQL in both dialects); only the null
 predicate (isinf spelling), tokenizer (split vs str_split) and identifier
 quoting differ and are parameterized here.
@@ -20,7 +27,7 @@ from collections.abc import Sequence
 from pyspark.sql import types as T
 
 from ..functions.inference import inferred_type_sql
-from ..functions.metrics import ATOM_METRICS, numeric_atom_sql, numeric_final_sql
+from ..functions.metrics import ATOM_METRICS, numeric_final_sql
 from ..functions.predicates import BOOLEAN_RE, FRACTIONAL_RE, INTEGRAL_RE
 
 INTEGRAL = "integral"
@@ -46,7 +53,7 @@ def _q(name: str) -> str:
     return f"`{name}`"
 
 
-def _token_count_sql(m: str, delim: str = " ", size_fn: str = "size(split({t}, '{d}'))") -> str:
+def _token_count_sql(m: str, size_fn: str = "size(split({t}, ' '))") -> str:
     """Token count with Java String.split(" ") semantics
     (StringTracker.java:25): trailing empty tokens drop, '' counts 1,
     all-delimiter strings count 0, inner empties are kept. ``size_fn``
@@ -59,8 +66,8 @@ def _token_count_sql(m: str, delim: str = " ", size_fn: str = "size(split({t}, '
     rtrim handles the trailing-delimiter drop; the subtraction handles the
     all-delimiter -> 0 edge ('' stays 1 because m != '' fails).
     """
-    t = f"rtrim({m})" if delim == " " else f"regexp_replace({m}, '(?:{delim})+$', '')"
-    sz = size_fn.format(t=t, d=delim)
+    t = f"rtrim({m})"
+    sz = size_fn.format(t=t)
     return f"(CAST({sz} AS DOUBLE) - CAST(({t} = '') AND ({m} != '') AS INT))"
 
 
@@ -75,11 +82,61 @@ def _null_pred(col: str, kind: str, null_strings: Sequence[str]) -> str:
     return " OR ".join(preds)
 
 
-def _num_projection_sql(d: str, prefix: str) -> list[str]:
-    """Row-level pieces of one numeric suite — the magnitude-tiered scheme
-    (mirrors metrics._suite_projection; see the tiering + branch-minimizing
-    notes there: the clamped value keeps floor/shift unguarded and
-    CSE-able)."""
+# Magnitude-tiered exact summation
+# --------------------------------
+# Goal: Σx and Σx² that are (a) order/partitioning-independent — so results
+# are bit-reproducible across engines and runs — and (b) never silently
+# wrong at scale (a naive Σ floor(x²) AS BIGINT wraps for |x|~1e6 columns
+# in the hundreds of millions of rows, and errors outright for id/epoch
+# magnitudes).
+#
+# Per value, chosen by the VALUE (not data order, so determinism holds):
+# - |x| < 2^31 ("small"): exact integer path.
+#   Σx:  floor(x) as LONG (|term| < 2^31 -> safe to ~4.3e9 rows/group) +
+#        1e-6-quantized fraction as LONG (safe to ~9.2e12 rows/group).
+#   Σx²: p = floor(x²) < 2^62 splits base-2^31 into (p DIV 2^31, p MOD
+#        2^31) — two LONG sums, each term < 2^31, safe to ~4.3e9
+#        rows/group — plus the quantized fraction.
+# - |x| >= 2^31 ("big": ids, epoch-nanos...): accumulate x and x² in
+#   DOUBLE sums. These are order-dependent in the last ulp, but such
+#   magnitudes exceed exact double range anyway; columns without big
+#   values keep full determinism.
+#
+# Variance tier (r12): the raw-moment formula (Σx² − (Σx)²/n)/(n−1) over
+# the double sum2_big accumulator cancels ~log10(x²/var) digits once the
+# big tier engages — at epoch-millis magnitude only ~4 digits survive,
+# and epoch-nanos variance collapses to pure noise. The reference is
+# precision-correct at any magnitude (Welford update + Chan merge,
+# core/.../VarianceTracker.java:21-69). We therefore also carry an
+# ``_m2`` atom — the central second moment Σ(x−μ)², computed by the
+# engine's NATIVE stable variance aggregate (Spark/DuckDB var_samp, both
+# Welford/Chan-based) — and finalize variance from m2 WHENEVER the big
+# tier engaged (sum2_big ≠ 0, see metrics.numeric_final_sql). Small-tier
+# groups keep the exact-integer raw-moment path, bit-reproducible across
+# engines; big-tier variance is order-dependent in the last ulp
+# (documented deviation — such columns already have order-dependent
+# double sums).
+#
+# All accumulators are LONG/DOUBLE -> whole-stage codegen (~10x faster
+# than DECIMAL(38,_) aggregation, measured on the sf0.1 flagship).
+
+
+def numeric_projection_sql(d: str, prefix: str) -> list[str]:
+    """Row-level pieces of one numeric suite over the DOUBLE expression
+    ``d`` (already null-masked), aggregated by ``numeric_aggs_sql``.
+
+    Branch-minimized: the value is CLAMPED to 0 outside the small range
+    (``dc``), so floor/shift run unguarded (overflow-safe) and Catalyst's
+    subexpression elimination shares them across the output columns — a
+    CASE around each piece (as in the DuckDB-only metrics.numeric_atom_sql)
+    would block CSE and re-evaluate d² per column (measured 4x slower).
+    Big values contribute 0 through the integer path and flow through the
+    two ``big`` doubles. NULL values yield NULL pieces (skipped by SUM).
+    The quantized fractions use floor(y+0.5): identical to ROUND half-up
+    for y >= 0 but pure double arithmetic (Spark's Round on doubles goes
+    through BigDecimal — measured 8x slower per row); p >= 0, so
+    shiftright/bitand give exact (p DIV 2^31, p MOD 2^31).
+    """
     small = f"ABS({d}) < 2147483648.0"
     dc = f"(CASE WHEN {small} THEN {d} ELSE 0.0 END)"
     dc2 = f"({dc} * {dc})"
@@ -96,7 +153,10 @@ def _num_projection_sql(d: str, prefix: str) -> list[str]:
     ]
 
 
-def _num_aggs_sql(in_prefix: str, out_prefix: str) -> list[str]:
+def numeric_aggs_sql(in_prefix: str, out_prefix: str) -> list[str]:
+    """Aggregates of the ``numeric_projection_sql`` pieces named
+    ``in_prefix``: the atom suite ``{out_prefix}_n .. {out_prefix}_m2``
+    that metrics.numeric_final_sql finalizes."""
     v = f"{in_prefix}_v"
     return [
         f"COUNT({v}) AS {out_prefix}_n",
@@ -110,7 +170,7 @@ def _num_aggs_sql(in_prefix: str, out_prefix: str) -> list[str]:
         f"SUM({in_prefix}_lo2) AS {out_prefix}_sum2_lo",
         f"SUM({in_prefix}_big2) AS {out_prefix}_sum2_big",
         # stable central moment for the big-magnitude variance tier
-        # (metrics.py variance-tier note); n<=1 -> 0.0
+        # (variance-tier note above); n<=1 -> 0.0
         f"COALESCE(VAR_SAMP({v}) * (COUNT({v}) - 1), 0.0) AS {out_prefix}_m2",
     ]
 
@@ -132,8 +192,16 @@ def _null_num_aggs(prefix: str) -> list[str]:
 
 
 class _ColumnSql:
-    """Per-column SQL fragments (projection, aggregation, struct fields),
-    mirroring metrics.ColumnProfileSpec exactly."""
+    """Per-column SQL fragments (projection, aggregation, struct fields).
+
+    Mirrors ColumnProfile.track's per-type dispatch
+    (core/.../ColumnProfile.java:76-117): counters always update; numeric
+    values feed the NumberTracker suite; strings feed the StringTracker
+    (length + token-count suites); booleans feed trueCount. Because Spark
+    columns are statically typed, the per-value type dispatch collapses to a
+    per-column choice of which suites are non-trivial — the same
+    simplification the reference's Spark layer gets from typed Datasets.
+    """
 
     def __init__(
         self,
@@ -141,13 +209,11 @@ class _ColumnSql:
         dt: T.DataType,
         null_strings: Sequence[str],
         coerce_strings: bool,
-        tokenizer_delim: str = " ",
     ) -> None:
         self.name = name
         self.kind = kind_of(dt)
         self.null_strings = null_strings
         self.coerce = coerce_strings and self.kind == STRING
-        self.delim = tokenizer_delim
 
     # -- projection -------------------------------------------------------
     #
@@ -199,7 +265,7 @@ class _ColumnSql:
                 out.append(f"CAST(LOWER({m}) = 'true' AS INT) AS {p}__true")
                 out.append(f"CAST(LENGTH({str_m}) AS DOUBLE) AS {p}__lenv")
                 out.append(
-                    f"{_token_count_sql(f'({str_m})', self.delim)} AS {p}__tokv"
+                    f"{_token_count_sql(f'({str_m})')} AS {p}__tokv"
                 )
                 out += [
                     f"CAST({i_p} AS INT) AS {p}__is_int",
@@ -208,7 +274,7 @@ class _ColumnSql:
                 ]
             else:
                 out.append(f"CAST(LENGTH({m}) AS DOUBLE) AS {p}__lenv")
-                out.append(f"{_token_count_sql(f'({m})', self.delim)} AS {p}__tokv")
+                out.append(f"{_token_count_sql(f'({m})')} AS {p}__tokv")
         return out
 
     def piece_projection(self) -> list[str]:
@@ -218,10 +284,10 @@ class _ColumnSql:
         if k == BOOLEAN or self.coerce:
             out.append(f"{p}__true")
         if k in (INTEGRAL, FRACTIONAL) or self.coerce:
-            out += _num_projection_sql(f"{p}__numv", f"{p}__num")
+            out += numeric_projection_sql(f"{p}__numv", f"{p}__num")
         if k == STRING:
-            out += _num_projection_sql(f"{p}__lenv", f"{p}__len")
-            out += _num_projection_sql(f"{p}__tokv", f"{p}__tok")
+            out += numeric_projection_sql(f"{p}__lenv", f"{p}__len")
+            out += numeric_projection_sql(f"{p}__tokv", f"{p}__tok")
             if self.coerce:
                 out += [f"{p}__is_int", f"{p}__is_frac", f"{p}__is_bool"]
         return out
@@ -261,12 +327,12 @@ class _ColumnSql:
             out.append(f"{tc[key]} AS {p}_{key}_count")
 
         if k in (INTEGRAL, FRACTIONAL) or self.coerce:
-            out += _num_aggs_sql(f"{p}__num", f"{p}_num")
+            out += numeric_aggs_sql(f"{p}__num", f"{p}_num")
         else:
             out += _null_num_aggs(f"{p}_num")
         if k == STRING:
-            out += _num_aggs_sql(f"{p}__len", f"{p}_len")
-            out += _num_aggs_sql(f"{p}__tok", f"{p}_tok")
+            out += numeric_aggs_sql(f"{p}__len", f"{p}_len")
+            out += numeric_aggs_sql(f"{p}__tok", f"{p}_tok")
         else:
             out += _null_num_aggs(f"{p}_len")
             out += _null_num_aggs(f"{p}_tok")
@@ -408,9 +474,9 @@ def build_melted_atoms_sql(
 
     # generic per-entry suite projection (shared across all columns)
     proj_pieces = (
-        _num_projection_sql("num_v", "gnum")
-        + _num_projection_sql("CAST(LENGTH(str_v) AS DOUBLE)", "glen")
-        + _num_projection_sql(_token_count_sql("str_v"), "gtok")
+        numeric_projection_sql("num_v", "gnum")
+        + numeric_projection_sql("CAST(LENGTH(str_v) AS DOUBLE)", "glen")
+        + numeric_projection_sql(_token_count_sql("str_v"), "gtok")
     )
     keysel2 = (", ".join(_q(k) for k in key_names) + ",") if key_names else ""
     proj = f"""SELECT {keysel2} column_name, kind, isnull, is_true,
@@ -432,9 +498,9 @@ def build_melted_atoms_sql(
         f"{kind_count('string')} AS string_count",
         f"{kind_count('unknown')} AS unknown_count",
     ]
-    aggs += _num_aggs_sql("gnum", "num")
-    aggs += _num_aggs_sql("glen", "len")
-    aggs += _num_aggs_sql("gtok", "tok")
+    aggs += numeric_aggs_sql("gnum", "num")
+    aggs += numeric_aggs_sql("glen", "len")
+    aggs += numeric_aggs_sql("gtok", "tok")
 
     group_clause = "GROUP BY " + ", ".join(
         [_q(k) for k in key_names] + ["column_name"]
@@ -465,4 +531,10 @@ def finalize_select_sql(key_names: Sequence[str]) -> str:
     )
 
 
-__all__ = ["build_atoms_sql", "finalize_select_sql", "kind_of", "numeric_atom_sql"]
+__all__ = [
+    "build_atoms_sql",
+    "finalize_select_sql",
+    "kind_of",
+    "numeric_aggs_sql",
+    "numeric_projection_sql",
+]
