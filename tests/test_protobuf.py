@@ -7,6 +7,8 @@ fixtures and asserts the regression metrics pinned below.
 
 from __future__ import annotations
 
+import struct
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -456,43 +458,149 @@ def test_model_profile_regression_rewrite_matches_golden(spark, tmp_path):
         assert got["regression"][f] == pytest.approx(golden[f], rel=1e-12)
 
 
-def test_distributed_sink_matches_driver_sink(spark, tmp_path):
-    # executor-side assembly must produce the same decoded content as the
-    # driver-side CLI sink, sketches and frequent items included
+def _kll_n(b: bytes | None) -> int | None:
+    """Stream length of a serialized KLL sketch (DataSketches preamble:
+    flags byte 3 — bit 0 empty, bit 2 single item; else n at bytes 8..16)."""
+    if b is None:
+        return None
+    if b[3] & 1:
+        return 0
+    if b[3] & 4:
+        return 1
+    return struct.unpack("<q", b[8:16])[0]
+
+
+def _decoded_by_tags(path: str) -> dict:
+    """Every decoded field of every message, keyed by its tags. KLL binaries
+    are reduced to their stream length: KLL compaction is randomized, so
+    its bytes differ run to run once a group holds more than 256 values."""
+    out = {}
+    for msg in iter_delimited(open(path, "rb").read()):
+        p = decode_dataset_profile(msg)
+        for col in p["columns"].values():
+            for nums in (
+                col["numbers"],
+                (col["strings"] or {}).get("length"),
+                (col["strings"] or {}).get("token_length"),
+            ):
+                if nums:
+                    nums["kll"] = _kll_n(nums["kll"])
+        key = tuple(sorted(p["properties"]["tags"].items()))
+        assert key not in out, key
+        out[key] = p
+    return out
+
+
+def _check_sinks_agree(spark, tmp_path, kw: dict) -> None:
+    # executor-side assembly must decode to the same message as the
+    # driver-side CLI sink in every field: counters, type counts, numbers
+    # (variance, doubles/longs, theta), string/length/token messages,
+    # frequent items, HLL, properties and tags
     from whylogs_java_spark.sources.protobuf import write_profile_bin_distributed
 
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").selectExpr(
+        "*", "CASE WHEN l_linenumber = 1 THEN 'NA' ELSE l_linestatus END AS mode_na"
+    )
     pd_, pc = str(tmp_path / "dist.bin"), str(tmp_path / "cli.bin")
-    n1 = write_profile_bin_distributed(li, pd_, group_by=["l_returnflag"])
-    n2 = write_profile_bin(li, pc, group_by=["l_returnflag"])
+    common = dict(group_by=["l_returnflag"], tags={"env": "test"}, **kw)
+    n1 = write_profile_bin_distributed(li, pd_, **common)
+    n2 = write_profile_bin(li, pc, **common)
     assert n1 == n2 == 3
 
-    def decoded(path):
-        out = {}
-        for msg in iter_delimited(open(path, "rb").read()):
-            p = decode_dataset_profile(msg)
-            out[p["properties"]["tags"]["whylogs.tag.l_returnflag"]] = p
-        return out
+    da, dc = _decoded_by_tags(pd_), _decoded_by_tags(pc)
+    assert {dict(k)["whylogs.tag.l_returnflag"] for k in dc} == {"A", "N", "R"}
+    assert da == dc
+    col = next(iter(dc.values()))["columns"]["mode_na"]
+    if kw.get("null_strings"):
+        assert col["type_counts"][1] > 0  # 'NA' counted as null
+    if kw.get("include_sketches", True):
+        assert col["hll"] is not None
+        assert next(iter(dc.values()))["columns"]["l_quantity"]["numbers"]["kll"] > 0
+    else:
+        assert col["hll"] is None
 
-    da, dc = decoded(pd_), decoded(pc)
-    assert set(da) == set(dc) == {"A", "N", "R"}
-    for tag, p in dc.items():
-        q = da[tag]
-        assert set(q["columns"]) == set(p["columns"])
-        for name, col in p["columns"].items():
-            got = q["columns"][name]
-            assert got["count"] == col["count"], (tag, name)
-            assert got["type_counts"] == col["type_counts"], (tag, name)
-            if col["numbers"] and col["numbers"].get("doubles"):
-                for f in ("count", "min", "max", "sum"):
-                    assert got["numbers"]["doubles"][f] == pytest.approx(
-                        col["numbers"]["doubles"][f], rel=1e-9
-                    ), (tag, name, f)
-            # same frequent-items content
-            from whylogs_java_spark.sources.protobuf import decode_items_sketch
 
-            assert decode_items_sketch(got["frequent_items"] or b"") == \
-                decode_items_sketch(col["frequent_items"] or b"")
+def test_distributed_sink_matches_driver_sink(spark, tmp_path):
+    _check_sinks_agree(spark, tmp_path, {})
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [{"include_sketches": False}, {"frequent_items_k": 0}, {"null_strings": ("NA",)}],
+    ids=["no_sketches", "no_items", "null_strings"],
+)
+def test_distributed_sink_matches_driver_sink_options(spark, tmp_path, kw):
+    _check_sinks_agree(spark, tmp_path, kw)
+
+
+def test_distributed_sink_null_group_key(spark, tmp_path):
+    # a NULL group key keeps its sketches and frequent items: the wire
+    # rows join null-safely on (keys, column_name)
+    from whylogs_java_spark.sources.protobuf import (
+        decode_items_sketch,
+        write_profile_bin_distributed,
+    )
+
+    df = spark.createDataFrame(
+        [("a", 1.0, "x"), (None, 2.0, "z"), (None, 3.0, "z"), ("b", None, None)],
+        "g string, v double, s string",
+    )
+    pd_, pc = str(tmp_path / "dist.bin"), str(tmp_path / "cli.bin")
+    assert write_profile_bin_distributed(df, pd_, group_by=["g"]) == 3
+    assert write_profile_bin(df, pc, group_by=["g"]) == 3
+    da, dc = _decoded_by_tags(pd_), _decoded_by_tags(pc)
+    assert da == dc
+    null_group = da[(("whylogs.tag.g", ""),)]["columns"]
+    assert decode_items_sketch(null_group["s"]["frequent_items"]) == [("z", 2)]
+    assert null_group["v"]["numbers"]["kll"] == 2
+    assert null_group["v"]["hll"] is not None
+    # a NaN key is one group, as Spark groups it
+    nan_keys = spark.createDataFrame(
+        [(float("nan"), 1.0, "x"), (float("nan"), 2.0, "y"), (1.0, 3.0, "z")],
+        "g double, v double, s string",
+    )
+    assert write_profile_bin_distributed(
+        nan_keys, str(tmp_path / "nan.bin"), group_by=["g"]
+    ) == 2
+
+
+def test_distributed_sink_plan_shape(spark, tmp_path):
+    # one Arrow map node and no grouped-pandas stage; with sort-merge joins
+    # forced and partition coalescing off, a group's rows still reach one
+    # mapInArrow call back to back, because the statement ends in
+    # DISTRIBUTE BY / SORT BY keys
+    from whylogs_java_spark.sources.protobuf import (
+        profile_messages_df,
+        write_profile_bin_distributed,
+    )
+
+    base = spark.range(60_000).selectExpr(
+        "id % 3000 AS g",
+        "CAST(id % 97 AS DOUBLE) AS v",
+        "CAST(id % 7 AS STRING) AS s",
+    )
+    plan = (
+        profile_messages_df(base, ["g"])._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "FlatMapGroupsInPandas" not in plan
+    assert plan.count("MapInArrow") == 1
+
+    confs = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    saved = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        out = str(tmp_path / "smj.bin")
+        assert write_profile_bin_distributed(
+            base, out, group_by=["g"], frequent_items_k=4
+        ) == 3000
+        assert len(_decoded_by_tags(out)) == 3000
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 def test_distributed_sink_many_groups_merge(spark, tmp_path):

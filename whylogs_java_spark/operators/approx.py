@@ -28,28 +28,18 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..constants import HLL_LGK, KLL_K, SUMMARY_QUANTILES
-from ..functions.predicates import masked, truncated_text
+from ..constants import SUMMARY_QUANTILES
+from ..plans.spark_sql import sketch_aggs_sql
 
 
 def sketch_aggs(df: DataFrame, columns: Sequence[str] | None, exclude: Sequence[str]):
     """The per-column sketch aggregate list (shared by the batch
-    ``sketch_profile`` and the streaming ``windowed_sketch_profile``)."""
+    ``sketch_profile`` and the streaming ``windowed_sketch_profile``) —
+    ``plans.spark_sql.sketch_aggs_sql``, the one definition the executor
+    wire sink also inlines."""
     schema = {f.name: f.dataType for f in df.schema.fields}
     cols = [c for c in (columns or df.columns) if c not in set(exclude)]
-    aggs = []
-    for c in cols:
-        dt = schema[c]
-        m = masked(F.col(c), dt)
-        if dt.typeName() in ("double", "float", "long", "integer", "short", "byte"):
-            aggs.append(
-                F.kll_sketch_agg_float(m.cast("float"), F.lit(KLL_K)).alias(f"{c}__kll")
-            )
-            aggs.append(F.theta_sketch_agg(m.cast("double")).alias(f"{c}__theta"))
-        aggs.append(
-            F.hll_sketch_agg(truncated_text(F.col(c)), F.lit(HLL_LGK)).alias(f"{c}__hll")
-        )
-    return aggs
+    return [F.expr(e) for c in cols for e in sketch_aggs_sql(c, schema[c])]
 
 
 def sketch_profile(

@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 from ..constants import (
     FREQUENT_ITEMS_K,
     HISTOGRAM_DEFAULT_BINS,
-    HLL_LGK,
     ROUND_DIGITS,
     SUMMARY_QUANTILES,
 )
@@ -305,22 +304,3 @@ def unique_counts(
         for c in columns
     ]
     return wide.select(*keys, F.explode(F.array(*elems)).alias("e")).select(*keys, "e.*")
-
-
-def hll_sketch_profile(
-    df: DataFrame, columns: Sequence[str], group_by: Sequence[str] = ()
-) -> DataFrame:
-    """Mergeable HLL sketch binaries per column (lgK=12, ColumnProfile.java:39).
-
-    The sketch binary column is re-mergeable with ``hll_union_agg`` — the
-    direct analogue of the reference's serialized HllSketch inside profile
-    blobs, but Catalyst-native.
-    """
-    keys = list(group_by)
-    grouped = df.groupBy(*keys) if keys else df.groupBy()
-    return grouped.agg(
-        *[
-            F.hll_sketch_agg(truncated_text(F.col(c)), F.lit(HLL_LGK)).alias(f"{c}__hll")
-            for c in columns
-        ]
-    )

@@ -5,7 +5,9 @@ from the fragments here — the batch profile (``build_atoms_sql``), the
 melt path, the windowed streaming profile (``_ColumnSql`` fragments via
 ``selectExpr``/``F.expr``), ``finalize_select_sql``, and the small numeric
 suites of the model/charpos/cube operators (``numeric_projection_sql`` +
-``numeric_aggs_sql``).
+``numeric_aggs_sql``). The sketch aggregates (``sketch_aggs_sql``), the
+exact top-k (``frequent_items_sql``) and the executor wire sink's input
+(``wire_rows_sql``) are defined here too.
 
 Why text instead of Column trees: building the ~400 expressions of a wide
 profile through the PySpark Column API costs seconds of py4j round trips
@@ -26,6 +28,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import types as T
 
+from ..constants import FREQUENT_ITEMS_K, HLL_LGK, KLL_K, STRING_LENGTH_MAX
 from ..functions.inference import inferred_type_sql
 from ..functions.metrics import ATOM_METRICS, numeric_final_sql
 from ..functions.predicates import BOOLEAN_RE, FRACTIONAL_RE, INTEGRAL_RE
@@ -531,10 +534,165 @@ def finalize_select_sql(key_names: Sequence[str]) -> str:
     )
 
 
+# Sketch tier and exact top-k
+# ---------------------------
+# The DataSketches aggregates and the frequent-items ranking are defined
+# here once: ``approx.sketch_aggs`` wraps ``sketch_aggs_sql`` in F.expr,
+# the driver wire sink collects ``frequent_items_sql``, and the executor
+# wire sink inlines both into ``wire_rows_sql``.
+
+_SKETCHED = ("double", "float", "long", "integer", "short", "byte")
+_ITEM_TYPES = (T.NumericType, T.BooleanType, T.StringType)
+
+
+def _masked_sql(c: str, dt: T.DataType, null_strings: Sequence[str] = ()) -> str:
+    return f"CASE WHEN NOT ({_null_pred(c, kind_of(dt), null_strings)}) THEN {c} END"
+
+
+def _text_sql(e: str) -> str:
+    """String form capped at 256 chars (ColumnProfile.java:132-138)."""
+    return f"substring(CAST({e} AS STRING), 1, {STRING_LENGTH_MAX})"
+
+
+def sketch_aggs_sql(name: str, dt: T.DataType) -> list[str]:
+    """Mergeable sketch aggregates of one column, aliased ``{name}__kll``
+    / ``__theta`` / ``__hll``: numeric columns get KLL(256) quantiles and
+    theta distincts over the null-masked value; every column gets
+    HLL(lgK=12) over its 256-char string form (ColumnProfile.trackText).
+
+    Kept out of the atom aggregate on purpose: a typed-imperative sketch
+    aggregate turns the codegen'd HashAggregate into an
+    ObjectHashAggregate."""
+    c = _q(name)
+    out = []
+    if dt.typeName() in _SKETCHED:
+        m = _masked_sql(c, dt)
+        out.append(f"kll_sketch_agg_float(CAST({m} AS FLOAT), {KLL_K}) AS {_q(name + '__kll')}")
+        out.append(f"theta_sketch_agg(CAST({m} AS DOUBLE)) AS {_q(name + '__theta')}")
+    out.append(f"hll_sketch_agg({_text_sql(c)}, {HLL_LGK}) AS {_q(name + '__hll')}")
+    return out
+
+
+def frequent_items_sql(
+    view: str,
+    schema: dict[str, T.DataType],
+    keys: Sequence[str],
+    null_strings: Sequence[str],
+    k: int,
+) -> str | None:
+    """Exact top-``k`` (keys, column_name, value, cnt) rows over the
+    256-char string forms of every non-null numeric/boolean/string value
+    (ColumnProfile.trackText), ranked by count desc then value. One pass:
+    tracked columns melt to (keys, column_name, value), count, and rank
+    within (keys, column_name) — so no window partition holds more than
+    one column's distinct values per group. None when no column is
+    tracked."""
+    cols = [c for c, dt in schema.items() if c not in keys and isinstance(dt, _ITEM_TYPES)]
+    if not cols:
+        return None
+    keys_sel = "".join(f"{_q(key)}, " for key in keys)
+    entries = ", ".join(
+        f"named_struct('column_name', '{c}', "
+        f"'value', {_text_sql(_masked_sql(_q(c), schema[c], null_strings))})"
+        for c in cols
+    )
+    part = ", ".join([_q(key) for key in keys] + ["column_name"])
+    return f"""
+    SELECT {keys_sel}column_name, value, cnt FROM (
+      SELECT *, row_number() OVER (PARTITION BY {part} ORDER BY cnt DESC, value ASC) AS __wjs_r
+      FROM (
+        SELECT {keys_sel}column_name, value, COUNT(1) AS cnt
+        FROM (SELECT {keys_sel}inline(array({entries})) FROM {view}) __wjs_melt
+        WHERE value IS NOT NULL
+        GROUP BY {part}, value
+      ) __wjs_counts
+    ) __wjs_ranked
+    WHERE __wjs_r <= {k}
+    """
+
+
+def wire_rows_sql(
+    view: str,
+    schema: dict[str, T.DataType],
+    keys: Sequence[str],
+    null_strings: Sequence[str] = (),
+    include_sketches: bool = True,
+    frequent_items_k: int = FREQUENT_ITEMS_K,
+) -> str:
+    """One statement holding everything a group's wire message needs: the
+    finalized profile rows (``build_atoms_sql`` + ``finalize_select_sql``)
+    left-joined on (keys, column_name) with the column's sketch binaries
+    (``__kll``/``__theta``/``__hll``, from their own GROUP BY keys) and
+    its exact top-k (``__fi``, array of (value, cnt)). Skipped parts are
+    typed NULL columns. The joins are null-safe (``<=>``) so a NULL group
+    key keeps its sketches, and the statement ends in DISTRIBUTE BY / SORT
+    BY keys: every group's rows are adjacent in one partition whatever
+    join strategy the planner picks."""
+    atoms, _ = build_atoms_sql(view, schema, keys, null_strings=null_strings)
+    keys_sel = "".join(f"{_q(key)}, " for key in keys)
+    by = ", ".join(_q(key) for key in keys)
+    ctes = [f"__wjs_fin AS ({finalize_select_sql(keys)} FROM ({atoms}) __wjs_atoms)"]
+    parts = ["__wjs_fin.*"]
+    joins = []
+
+    def join(cte: str) -> str:
+        on = [f"__wjs_fin.{_q(key)} <=> {cte}.{_q(key)}" for key in keys]
+        on.append(f"__wjs_fin.column_name = {cte}.column_name")
+        return f"LEFT JOIN {cte} ON {' AND '.join(on)}"
+
+    if include_sketches:
+        cols = [c for c in schema if c not in keys]
+        aggs = ", ".join(e for c in cols for e in sketch_aggs_sql(c, schema[c]))
+
+        def blob(c: str, kind: str) -> str:
+            if kind == "hll" or schema[c].typeName() in _SKETCHED:
+                return _q(f"{c}__{kind}")
+            return "CAST(NULL AS BINARY)"
+
+        entries = ", ".join(
+            f"named_struct('column_name', '{c}', 'kll', {blob(c, 'kll')}, "
+            f"'theta', {blob(c, 'theta')}, 'hll', {blob(c, 'hll')})"
+            for c in cols
+        )
+        ctes.append(
+            f"__wjs_sk AS (SELECT {keys_sel}inline(array({entries})) FROM "
+            f"(SELECT {keys_sel}{aggs} FROM {view} GROUP BY {by}) __wjs_skw)"
+        )
+        parts += ["__wjs_sk.kll AS __kll", "__wjs_sk.theta AS __theta", "__wjs_sk.hll AS __hll"]
+        joins.append(join("__wjs_sk"))
+    else:
+        parts += [f"CAST(NULL AS BINARY) AS __{kind}" for kind in ("kll", "theta", "hll")]
+
+    top = (
+        frequent_items_sql(view, schema, keys, null_strings, frequent_items_k)
+        if frequent_items_k
+        else None
+    )
+    if top is not None:
+        ctes.append(
+            f"__wjs_fi AS (SELECT {keys_sel}column_name, "
+            f"collect_list(named_struct('value', value, 'cnt', cnt)) AS fi "
+            f"FROM ({top}) __wjs_top GROUP BY {keys_sel}column_name)"
+        )
+        parts.append("__wjs_fi.fi AS __fi")
+        joins.append(join("__wjs_fi"))
+    else:
+        parts.append("CAST(NULL AS ARRAY<STRUCT<value: STRING, cnt: BIGINT>>) AS __fi")
+
+    return (
+        f"WITH {', '.join(ctes)} SELECT * FROM ("
+        f"SELECT {', '.join(parts)} FROM __wjs_fin {' '.join(joins)}"
+        f") __wjs_rows DISTRIBUTE BY {by} SORT BY {by}"
+    )
+
+
 __all__ = [
     "build_atoms_sql",
     "finalize_select_sql",
+    "frequent_items_sql",
     "kind_of",
     "numeric_aggs_sql",
     "numeric_projection_sql",
+    "sketch_aggs_sql",
+    "wire_rows_sql",
 ]

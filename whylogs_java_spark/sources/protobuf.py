@@ -51,6 +51,8 @@ import os
 import struct
 from collections.abc import Iterable, Sequence
 
+from ..constants import HLL_LGK
+
 # ---------------------------------------------------------------------------
 # wire primitives
 # ---------------------------------------------------------------------------
@@ -555,6 +557,35 @@ def items_sketch_bytes(
         enc = v.encode("utf-8")
         out += struct.pack("<i", len(enc)) + enc
     return bytes(out)
+
+
+def _exact_items(
+    pairs: Sequence[tuple[str, int]], row: dict, fetched_k: int
+) -> bytes | None:
+    """ItemsSketch binary of a column's exact top-``fetched_k`` (value,
+    count) pairs over the column's non-null stream (None without pairs)."""
+    if not pairs:
+        return None
+    tracked = (row.get("count") or 0) - (row.get("null_count") or 0)
+    return items_sketch_bytes(
+        pairs,
+        stream_length=tracked,
+        offset=items_saturation_offset(pairs, fetched_k),
+    )
+
+
+def _column_sketches(kll, theta, hll, items: bytes | None = None) -> dict:
+    """One column's sketch dict as ``column_message`` reads it, from the
+    binaries a sink fetched (None where absent)."""
+    cd: dict = {}
+    for kind, blob in (("kll", kll), ("theta", theta), ("hll", hll)):
+        if blob is not None:
+            cd[kind] = bytes(blob)
+    if hll is not None:
+        cd["hll_lgk"] = HLL_LGK
+    if items is not None:
+        cd["items"] = items
+    return cd
 
 
 # ---------------------------------------------------------------------------
@@ -1142,25 +1173,33 @@ def read_profile_bin(spark, path):
     and the raw DataSketches binaries (estimable with Spark's
     kll/theta/hll functions — heapify-compatible across versions).
 
-    Uses ``binaryFile`` + ``mapInPandas`` (Arrow-batched): each profile is
-    small by construction (O(columns × sketch constants)); the parallelism
-    unit is the file, which is the right grain for object-store layouts of
-    many profiles.
+    Uses ``binaryFile`` + ``mapInArrow``: each profile is small by
+    construction (O(columns × sketch constants)); the parallelism unit is
+    the file, which is the right grain for object-store layouts of many
+    profiles.
     """
-    import pandas as pd
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
 
+    schema = to_arrow_schema(StructType.fromDDL(_READ_SCHEMA))
     files = spark.read.format("binaryFile").load(path)
 
     def parse(batches):
-        for pdf in batches:
-            rows: list[tuple] = []
-            for path_, content in zip(pdf["path"], pdf["content"]):
-                for idx, msg in enumerate(iter_delimited(bytes(content))):
-                    rows.extend(_rows_of_profile(path_, idx, decode_dataset_profile(msg)))
-            cols = [s.split(" ")[0] for s in _READ_SCHEMA.split(", ")]
-            yield pd.DataFrame(rows, columns=cols)
+        import pyarrow as pa
 
-    return files.select("path", "content").mapInPandas(parse, schema=_READ_SCHEMA)
+        for batch in batches:
+            rows: list[dict] = []
+            for path_, content in zip(
+                batch.column("path").to_pylist(), batch.column("content").to_pylist()
+            ):
+                for idx, msg in enumerate(iter_delimited(content)):
+                    rows.extend(
+                        dict(zip(schema.names, r))
+                        for r in _rows_of_profile(path_, idx, decode_dataset_profile(msg))
+                    )
+            yield pa.RecordBatch.from_pylist(rows, schema=schema)
+
+    return files.select("path", "content").mapInArrow(parse, schema=_READ_SCHEMA)
 
 
 def merge_profile_bins(
@@ -1297,13 +1336,7 @@ def merge_profile_bins(
                 meta_of[gk] = {
                     k: v for k, v in meta_of[gk].items() if m.get(k) == v
                 }
-        col = rd["column_name"]
-        cd = sketches.setdefault(gk, {}).setdefault(col, {})
-        for field in ("kll", "theta", "hll"):
-            blob = rd.pop(field)
-            if blob is not None:
-                cd[field] = bytes(blob)
-        cd["hll_lgk"] = 12
+        items = None
         fi: dict[str, int] = {}
         for m in items_list:
             for v, c in (m or {}).items():
@@ -1320,11 +1353,14 @@ def merge_profile_bins(
                 off += pairs[96][1]
             elif items_max_n >= 96 and off == 0:
                 off = 1
-            cd["items"] = items_sketch_bytes(
+            items = items_sketch_bytes(
                 pairs[:96],
                 stream_length=(rd.get("count") or 0) - (rd.get("null_count") or 0),
                 offset=off,
             )
+        sketches.setdefault(gk, {})[rd["column_name"]] = _column_sketches(
+            rd.pop("kll"), rd.pop("theta"), rd.pop("hll"), items
+        )
         groups.setdefault(gk, []).append(rd)
 
     messages = []
@@ -1363,18 +1399,22 @@ def profile_messages_df(
 
     The distributed message-assembly core shared by the delimited-file sink
     (``write_profile_bin_distributed``) and the REST upload sink
-    (``sources.rest.upload_profiles``): finalized profile rows, melted
-    sketch binaries and per-column frequent items join on (group keys,
-    column_name) and each group's DatasetProfileMessage is built inside
-    ``applyInPandas`` (Arrow-batched, one group per call — the same
-    per-group grain as the reference's DatasetProfileAggregator).
+    (``sources.rest.upload_profiles``). One ``spark.sql`` statement
+    (``plans.spark_sql.wire_rows_sql``) builds the whole input: finalized
+    profile rows null-safely joined on (group keys, column_name) with
+    their sketch binaries and exact top-k, distributed and sorted by the
+    group keys. ``mapInArrow`` then walks each partition's Arrow batches
+    row by row and closes a group's DatasetProfileMessage when the key
+    changes — the same per-group grain as the reference's
+    DatasetProfileAggregator, holding one batch and one group at a time.
     Requires a non-empty ``group_by`` (ungrouped profiles are the one-
     message CLI regime — use ``write_profile_bin``).
-    """
-    import pandas as pd
-    from pyspark.sql import functions as F
 
-    from ..operators.profile import profile
+    KLL bytes are not reproducible run to run for groups of more than 256
+    values (DataSketches KLL compaction is randomized); every other field
+    is.
+    """
+    from ..plans.spark_sql import wire_rows_sql
 
     keys = list(group_by)
     if not keys:
@@ -1382,103 +1422,40 @@ def profile_messages_df(
             "profile_messages_df needs group_by; ungrouped profiles are the "
             "single-message regime of write_profile_bin"
         )
-
-    fin = profile(df, group_by=keys, null_strings=null_strings)
-    joined = fin
-
-    if include_sketches:
-        from ..operators.approx import sketch_profile
-
-        sk_wide = sketch_profile(df, group_by=keys)
-        field_names = {f.name for f in sk_wide.schema.fields}
-        cols = sorted({n.rsplit("__", 1)[0] for n in field_names if "__" in n})
-
-        def blob(name: str):
-            return (
-                F.col(name) if name in field_names else F.lit(None).cast("binary")
-            )
-
-        entries = [
-            F.struct(
-                F.lit(c).alias("column_name"),
-                blob(f"{c}__kll").alias("__kll"),
-                blob(f"{c}__theta").alias("__theta"),
-                blob(f"{c}__hll").alias("__hll"),
-            )
-            for c in cols
-        ]
-        sk_long = sk_wide.select(
-            *keys, F.explode(F.array(*entries)).alias("e")
-        ).select(*keys, "e.*")
-        joined = joined.join(sk_long, on=[*keys, "column_name"], how="left")
-    else:
-        joined = (
-            joined.withColumn("__kll", F.lit(None).cast("binary"))
-            .withColumn("__theta", F.lit(None).cast("binary"))
-            .withColumn("__hll", F.lit(None).cast("binary"))
-        )
-
-    top = (
-        _frequent_items_df(df, keys, null_strings, frequent_items_k)
-        if frequent_items_k
-        else None
+    schema = {f.name: f.dataType for f in df.schema.fields}
+    rows = df.sparkSession.sql(
+        wire_rows_sql(
+            "{src}", schema, keys, null_strings, include_sketches, frequent_items_k
+        ),
+        src=df,
     )
-    if top is not None:
-        fi_long = top.groupBy(*keys, "column_name").agg(
-            F.collect_list(F.struct("value", "cnt")).alias("__fi")
-        )
-        joined = joined.join(fi_long, on=[*keys, "column_name"], how="left")
-    else:
-        joined = joined.withColumn(
-            "__fi", F.lit(None).cast("array<struct<value:string,cnt:bigint>>")
-        )
-
     base_tags = dict(tags or {})
-    stat_fields = [
-        f.name
-        for f in joined.schema.fields
-        if f.name not in set(keys) and not f.name.startswith("__")
-    ]
+    skip = set(keys)
 
-    def build(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import math as _math
-
+    def message(group: list[dict]) -> bytes:
         gtags = dict(base_tags)
         for k in keys:
-            v = pdf.iloc[0][k]
+            v = group[0][k]
             gtags[f"whylogs.tag.{k}"] = "" if v is None else str(v)
         column_rows = []
         sks: dict[str, dict] = {}
-        for _, r in pdf.iterrows():
-            rd = {}
-            for f_ in stat_fields:
-                v = r[f_]
-                if v is None or (isinstance(v, float) and _math.isnan(v)):
-                    rd[f_] = None
-                elif hasattr(v, "item"):
-                    rd[f_] = v.item()
-                else:
-                    rd[f_] = v
+        for r in group:
+            rd = {
+                f: None if isinstance(v, float) and math.isnan(v) else v
+                for f, v in r.items()
+                if f not in skip and not f.startswith("__")
+            }
             column_rows.append(rd)
-            cd: dict = {}
-            for field, kind in (("__kll", "kll"), ("__theta", "theta"), ("__hll", "hll")):
-                v = r[field]
-                if v is not None and not (isinstance(v, float) and _math.isnan(v)):
-                    cd[kind] = bytes(v)
-            if "hll" in cd:
-                cd["hll_lgk"] = 12
-            fi = r["__fi"]
-            if fi is not None and len(fi):
-                tracked = (rd.get("count") or 0) - (rd.get("null_count") or 0)
-                fi_pairs = [(e["value"], int(e["cnt"])) for e in fi]
-                cd["items"] = items_sketch_bytes(
-                    fi_pairs,
-                    stream_length=tracked,
-                    offset=items_saturation_offset(fi_pairs, frequent_items_k),
-                )
+            cd = _column_sketches(
+                r["__kll"], r["__theta"], r["__hll"],
+                _exact_items(
+                    [(e["value"], e["cnt"]) for e in r["__fi"] or ()],
+                    rd, frequent_items_k,
+                ),
+            )
             if cd:
                 sks[rd["column_name"]] = cd
-        msg = dataset_profile_message(
+        return dataset_profile_message(
             column_rows,
             session_id=session_id,
             session_timestamp=session_timestamp,
@@ -1487,9 +1464,38 @@ def profile_messages_df(
             metadata=metadata,
             sketches_by_column=sks,
         )
-        return pd.DataFrame({"msg": [msg]})
 
-    return joined.groupBy(*keys).applyInPandas(build, schema="msg binary")
+    def build(batches):
+        import pyarrow as pa
+
+        def out(msgs: list[bytes]):
+            return pa.RecordBatch.from_arrays([pa.array(msgs, pa.binary())], ["msg"])
+
+        group: list[dict] = []
+        key = None
+        for batch in batches:
+            msgs = []
+            for r in batch.to_pylist():
+                k = tuple(r[c] for c in keys)
+                if group and not _same_key(k, key):
+                    msgs.append(message(group))
+                    group = []
+                key = k
+                group.append(r)
+            if msgs:
+                yield out(msgs)
+        if group:
+            yield out([message(group)])
+
+    return rows.mapInArrow(build, schema="msg binary")
+
+
+def _same_key(a: tuple, b: tuple) -> bool:
+    """Group-key equality as Spark groups: NaN equals NaN."""
+    return all(
+        x == y or (isinstance(x, float) and isinstance(y, float) and x != x and y != y)
+        for x, y in zip(a, b)
+    )
 
 
 def write_profile_bin_distributed(
@@ -1510,11 +1516,14 @@ def write_profile_bin_distributed(
     ``write_profile_bin`` collects finalized rows and assembles messages on
     the driver — the right shape for the CLI regime (one or a few
     messages), a bottleneck at millions of groups. Here the messages come
-    from ``profile_messages_df`` (executor-side assembly) and the driver
-    streams the finished blobs to the delimited file via
+    from ``profile_messages_df`` (one SQL statement, then ``mapInArrow``
+    assembly over key-sorted Arrow batches on the executors) and the
+    driver streams the finished blobs to the delimited file via
     ``toLocalIterator`` — it holds one partition of O(columns)-sized
     messages at a time, never the whole output, and only concatenates
-    bytes.
+    bytes. Messages decode equal to ``write_profile_bin``'s, NULL group
+    keys included; only KLL bytes of groups with more than 256 values
+    differ (randomized compaction, same ``n``).
 
     Message order in the file follows partition order (readers treat the
     stream as a set — DatasetProfile.parseDelimitedFrom semantics).
@@ -1548,90 +1557,19 @@ def write_profile_bin_distributed(
     return n
 
 
-def _frequent_items_df(
-    df, keys: Sequence[str], null_strings: Sequence[str], k: int
-):
-    """Distributed (keys, column_name, value, cnt) top-k rows — the
-    DataFrame half of ``_frequent_items_by_group`` (which collects)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from ..functions.predicates import masked, truncated_text
-
-    tracked_types = (T.NumericType, T.BooleanType, T.StringType)
-    cols = [
-        f.name
-        for f in df.schema.fields
-        if f.name not in set(keys) and isinstance(f.dataType, tracked_types)
-    ]
-    if not cols:
-        return None
-    schema = {f.name: f.dataType for f in df.schema.fields}
-    entries = [
-        F.struct(
-            F.lit(c).alias("column_name"),
-            truncated_text(masked(F.col(c), schema[c], null_strings)).alias("value"),
-        )
-        for c in cols
-    ]
-    melted = df.select(*keys, F.explode(F.array(*entries)).alias("e")).select(
-        *keys, "e.*"
-    )
-    counts = (
-        melted.where(F.col("value").isNotNull())
-        .groupBy(*keys, "column_name", "value")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = Window.partitionBy(*keys, "column_name").orderBy(
-        F.desc("cnt"), F.asc("value")
-    )
-    return counts.withColumn("__r", F.row_number().over(w)).where(F.col("__r") <= k)
-
-
 def _frequent_items_by_group(
     df, keys: Sequence[str], null_strings: Sequence[str], k: int
 ) -> dict[tuple, dict[str, list[tuple[str, int]]]]:
-    """Exact top-k string forms per (group, column) in ONE distributed
-    pass: melt tracked columns to (keys, column_name, value), count, rank
-    within (keys, column_name) — the window partitions on the melt key, so
-    no partition holds more than one column's distinct values per group."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
+    """Exact top-k string forms per (group, column), collected from the
+    one-pass ``plans.spark_sql.frequent_items_sql`` ranking."""
+    from ..plans.spark_sql import frequent_items_sql
 
-    from ..functions.predicates import masked, truncated_text
-
-    tracked_types = (T.NumericType, T.BooleanType, T.StringType)
-    cols = [
-        f.name
-        for f in df.schema.fields
-        if f.name not in set(keys) and isinstance(f.dataType, tracked_types)
-    ]
-    if not cols:
-        return {}
     schema = {f.name: f.dataType for f in df.schema.fields}
-    entries = [
-        F.struct(
-            F.lit(c).alias("column_name"),
-            truncated_text(masked(F.col(c), schema[c], null_strings)).alias("value"),
-        )
-        for c in cols
-    ]
-    melted = df.select(*keys, F.explode(F.array(*entries)).alias("e")).select(
-        *keys, "e.*"
-    )
-    counts = (
-        melted.where(F.col("value").isNotNull())
-        .groupBy(*keys, "column_name", "value")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = Window.partitionBy(*keys, "column_name").orderBy(
-        F.desc("cnt"), F.asc("value")
-    )
-    top = counts.withColumn("__r", F.row_number().over(w)).where(F.col("__r") <= k)
+    sql = frequent_items_sql("{src}", schema, keys, null_strings, k)
     out: dict[tuple, dict[str, list[tuple[str, int]]]] = {}
-    for r in top.collect():
+    if sql is None:
+        return out
+    for r in df.sparkSession.sql(sql, src=df).collect():
         gk = tuple(r[key] for key in keys)
         out.setdefault(gk, {}).setdefault(r["column_name"], []).append(
             (r["value"], r["cnt"])
@@ -1690,44 +1628,27 @@ def write_profile_bin(
     if frequent_items_k:
         freq = _frequent_items_by_group(df, keys, null_strings, frequent_items_k)
 
-    sketches: dict[tuple, dict[str, dict]] = {}
+    wide: dict[tuple, dict] = {}
     if include_sketches:
         from ..operators.approx import sketch_profile
 
-        sk_rows = sketch_profile(df, group_by=keys).collect()
-        for r in sk_rows:
-            gk = tuple(r[k] for k in keys)
-            d = sketches.setdefault(gk, {})
-            rd = r.asDict()
-            for col_field, blob in rd.items():
-                if "__" not in col_field or blob is None:
-                    continue
-                col, kind = col_field.rsplit("__", 1)
-                cd = d.setdefault(col, {})
-                if kind == "kll":
-                    cd["kll"] = bytes(blob)
-                elif kind == "theta":
-                    cd["theta"] = bytes(blob)
-                elif kind == "hll":
-                    cd["hll"] = bytes(blob)
-                    cd["hll_lgk"] = 12
+        for r in sketch_profile(df, group_by=keys).collect():
+            wide[tuple(r[k] for k in keys)] = r.asDict()
 
     groups: dict[tuple, list[dict]] = {}
+    sketches: dict[tuple, dict[str, dict]] = {}
     for r in fin:
         rd = r.asDict()
         gk = tuple(rd.pop(k) for k in keys)
         groups.setdefault(gk, []).append(rd)
         col = rd["column_name"]
-        fi = freq.get(gk, {}).get(col)
-        if fi:
-            tracked = (rd.get("count") or 0) - (rd.get("null_count") or 0)
-            sketches.setdefault(gk, {}).setdefault(col, {})["items"] = (
-                items_sketch_bytes(
-                    fi,
-                    stream_length=tracked,
-                    offset=items_saturation_offset(fi, frequent_items_k),
-                )
-            )
+        sk = wide.get(gk, {})
+        cd = _column_sketches(
+            sk.get(f"{col}__kll"), sk.get(f"{col}__theta"), sk.get(f"{col}__hll"),
+            _exact_items(freq.get(gk, {}).get(col), rd, frequent_items_k),
+        )
+        if cd:
+            sketches.setdefault(gk, {})[col] = cd
 
     messages = []
     for gk in sorted(groups, key=lambda t: tuple(str(x) for x in t)):

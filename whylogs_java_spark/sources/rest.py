@@ -117,10 +117,13 @@ def upload_profiles(
     """Profile ``df`` per group and upload each group's wire message.
 
     Message assembly AND upload both run on the executors
-    (``profile_messages_df`` + ``foreachPartition``) — the scale shape of
-    the reference's ``log()`` sink with the driver fully out of the data
-    path. Returns the number of groups uploaded (from a count of the
-    message DataFrame — the only driver-side scalar).
+    (``profile_messages_df`` — one SQL statement feeding a ``mapInArrow``
+    assembler — then ``foreachPartition``) — the scale shape of the
+    reference's ``log()`` sink with the driver fully out of the data
+    path. A group whose key is NULL uploads with its sketches and
+    frequent items, tagged with an empty key value. Returns the number of
+    groups uploaded (from a count of the message DataFrame — the only
+    driver-side scalar).
 
     Uploads are at-least-once under Spark task retries, matching the
     reference (profile uploads are idempotent merges server-side).
